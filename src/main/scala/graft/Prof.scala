@@ -34,7 +34,7 @@ object Prof {
     }
     import org.apache.spark.sql.functions._
     val rules = t("rules compile") {
-      graft.etl.Rules.fromJson(SparkEntry.carrotTpchRulesForProf, schema)
+      graft.etl.Rules.fromJson(SparkEntry.carrotTpchRules, schema)
     }
     def readSource(name: String) = name match {
       case "customer_src" =>

@@ -230,7 +230,6 @@ final class CarrotEngine(
   private[etl] def metricsSchema: OmopSchema = schema
   private[etl] def metricsRules: CarrotRules = rules
   private[etl] def metricsRaw: Map[String, DataFrame] = rawSources
-  private[etl] def metricsPrepared: Map[String, DataFrame] = prepared
   private[etl] def metricsBuilds: Map[String, TargetBuild] = builds
   private[etl] def metricsDateCols(src: String): Seq[String] = dateColsOf(src)
   private[etl] def sparkSession: SparkSession = spark

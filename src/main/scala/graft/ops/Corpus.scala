@@ -1832,11 +1832,14 @@ object Corpus {
         base.withColumn("_ts_one", lit(1L)),
         groupCol, "_ts_one",
         supplies => {
+          // an empty input has no groups and a null total: no allocations,
+          // so the draw returns an empty frame of the same schema
           val tot = base.groupBy(col(groupCol).as("_g"))
             .agg(count(lit(1)).as("n_docs"))
             .agg(sum(pow(col("n_docs"), alpha)).as("_tot"))
-            .collect()(0).getDouble(0)
-          temperatureAllocsLocal(supplies, alpha, budget, tot)
+            .collect()(0)
+          if (tot.isNullAt(0)) Map.empty
+          else temperatureAllocsLocal(supplies, alpha, budget, tot.getDouble(0))
         },
         scope,
         md5(concat(lit(s"$seed|"), col(idCol).cast("string"))), col(idCol))

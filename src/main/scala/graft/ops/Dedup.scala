@@ -430,18 +430,6 @@ object Dedup {
           .as("overlap_frac"))
   }
 
-  /** 32-bit SimHash: per bit, majority vote over xxhash64(token) bits. */
-  def simhash32(text: Column): Column = {
-    val t = split(lower(trim(text)), "\\s+")
-    val hashes = transform(t, w => xxhash64(w))
-    val bits: Seq[Column] = (0 until 32).map { b =>
-      val mask = 1L << b
-      val ones = size(filter(hashes, h => h.bitwiseAND(lit(mask)) =!= 0L))
-      when(ones * 2 >= size(hashes), lit(mask)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
   /** Hamming distance between two simhash values. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 

@@ -432,6 +432,13 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(got.size == budget, "largest-remainder allocations sum exactly to the budget")
   }
 
+  test("temperatureSample on an empty corpus returns an empty frame of the same schema") {
+    val docs = Seq.empty[(Long, String)].toDF("doc_id", "grp")
+    val got = Corpus.temperatureSample(docs, "doc_id", "grp", 0.5, 20L)
+    assert(got.schema == docs.schema)
+    assert(got.collect().isEmpty)
+  }
+
   test("curation operators drop null-text rows instead of failing") {
     val docs = Seq((0L, "a b c d", "en"), (1L, null, "en"), (2L, "a b", "de"))
       .toDF("doc_id", "text", "lang")

@@ -28,8 +28,10 @@ object Golden {
     .getOrCreate()
 
   val RefRoot   = "/root/reference"
-  val DdlPath   = s"$RefRoot/carrottransform/config/OMOPCDM_postgresql_5.3_ddl.sql"
-  val CfgPath   = s"$RefRoot/carrottransform/config/config.json"
+  // the bundled copies: DispatchSpec byte-compares them with the
+  // reference's whenever the reference checkout is present
+  val DdlPath   = "@carrot/config/OMOPCDM_postgresql_5.3_ddl.sql"
+  val CfgPath   = "@carrot/config/config.json"
 
   lazy val schema: OmopSchema = OmopSchema.fromFiles(DdlPath, CfgPath)
 
