@@ -79,7 +79,7 @@ object SparkEntry {
     * customer = the person file (market segment as the mapped gender code,
     * a synthetic-but-deterministic birthdate), orders = a measurement feed.
     * The DuckDB oracle replays the same pipeline in SQL. */
-  private[graft] val carrotTpchRules: String =
+  private val carrotTpchRules: String =
     """{"metadata": {"dataset": "tpch"}, "cdm": {
       |  "person": {"customer_src": {
       |    "person_id_mapping": {"source_field": "person_id", "dest_field": "person_id"},

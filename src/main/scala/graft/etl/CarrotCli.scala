@@ -181,28 +181,23 @@ object CarrotCli {
       cacheJoined = true) // every target is consumed twice: write + summary
 
     val write = Dispatch.outputTarget(spark, output, dirMode = outMode == "dir")
-    def timed(what: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime(); f
-      if (sys.env.contains("GRAFT_PROF"))
-        System.err.println(f"[prof] cli $what%-22s ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    timed("person_ids")(write("person_ids", engine.personIds))
+    write("person_ids", engine.personIds)
     // file-ish sinks get the reference's sequential row order; a SQL table
     // has no observable order, so skip the global sort there
     val results = if (Dispatch.isSql(output, spark.sparkContext.hadoopConfiguration) &&
         !Dispatch.isMinio(output))
       engine.run() else engine.runOrdered()
-    for ((target, df) <- results) timed(target)(write(target, df))
-    timed("summary_mapstream")(write("summary_mapstream", engine.summary(threshold)))
+    for ((target, df) <- results) write(target, df)
+    write("summary_mapstream", engine.summary(threshold))
 
     // Reference logging surface (logger.py; run.py:304-307,341): one
     // INPUT line per source file (input count + time since start), a
     // TARGET line per mapped table — zero counts included, the reference
     // initializes every mapped target's counter — then the 80-dash
-    // separator and the final elapsed line. One extra metadata-sized
-    // aggregation over the engine's cached targets; NEVER thresholded
-    // (the reference logs its raw loop counters, the threshold only
-    // filters the written summary).
+    // separator and the final elapsed line. The counts are a select from
+    // the engine's cached counted relation, which the summary write just
+    // built; NEVER thresholded (the reference logs its raw loop counters,
+    // the threshold only filters the written summary).
     val logRows = CarrotMetrics.runLogCounts(engine).collect()
     val inCounts = logRows.filter(_.getAs[String]("count_type") == "input_count")
       .map(r => r.getAs[String]("source") -> r.getAs[Long]("n")).toMap

@@ -33,10 +33,11 @@ final class CarrotEngine(
 
   import CarrotEngine._
 
-  /** Lifetime of every cache this engine materializes (raw sources, the
-    * person dictionary, IdAssign positioned snapshots). One-shot processes
-    * can skip close() — JVM exit reclaims — but long-lived sessions must
-    * call it after the last action on the outputs. */
+  /** Lifetime of every cache this engine materializes (raw and
+    * date-normalized sources, the person dictionary, IdAssign positioned
+    * snapshots, joined targets, the metrics counted relation). One-shot
+    * processes can skip close() — JVM exit reclaims — but long-lived
+    * sessions must call it after the last action on the outputs. */
   private val scope = new graft.ops.CacheScope
 
   /** Unpersist all engine-held caches. The output DataFrames remain valid
@@ -62,22 +63,17 @@ final class CarrotEngine(
     pms.head
   }
 
-  /** Raw per-source DataFrames. An under-split source is repartitioned AND
-    * cached (`ensureMaterialized`): the cache is what keeps the regex-heavy
-    * date filter from being pushed back into a single-task scan, and every
-    * source here has ≥2 physical passes anyway (auto-number offsets + final
-    * output, or person dictionary + person branch). Well-split inputs (the
-    * cluster-scale case) are left alone — scan-side filter pushdown is then
-    * the right plan. Row order is irrelevant; ordering rides on `_row_idx`. */
+  /** Raw per-source DataFrames, re-split when under-split
+    * (`Parallelize.ensure`) and cached. Every source is read at least
+    * twice (its target branches and the metrics scan; the person file also
+    * feeds the dictionary), and the cache is an optimizer barrier: without
+    * it Catalyst pushes the regex-heavy date filter back through the
+    * repartition into what may be a single-task scan. It also pins
+    * `_row_idx`, the processing-order key, to one snapshot for every
+    * consumer. Row order is irrelevant; ordering rides on `_row_idx`. */
   private lazy val rawSources: Map[String, DataFrame] =
     rules.sourceTables.map { s =>
-      val consumers = rules.forSource(s).size + (if (s == personMapping.source) 1 else 0)
-      val df = graft.ops.Parallelize.ensureMaterialized(readSource(s), scope)
-      // a well-split multi-consumer source still pays one scan per consumer
-      // unless cached; keep the old multi-consumer cache for that case
-      s -> (if (consumers > 1 && df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-              scope.track(df.cache())
-            else df)
+      s -> scope.track(graft.ops.Parallelize.ensure(readSource(s)).cache())
     }.toMap
 
   /** J2: the person dictionary, built from the RAW person file (strict
@@ -119,16 +115,11 @@ final class CarrotEngine(
       d.withColumn(c, graft.functions.DateExprs.normalise8601(col(c)))
     }
     val filtered = dateColsOf(src).foldLeft(out)((d, c) => d.filter(col(c).isNotNull))
-    // the normalizer's regex chain is the engine's hottest expression, and it
-    // gets evaluated once in the filter AND once in the projection, per
-    // physical pass (a range exchange alone makes two passes: sample +
-    // shuffle write). When the source is small enough that ensureMaterialized
-    // cached it, cache the normalized view too — the regex then runs exactly
-    // once per row. Large (well-split) sources stay uncached: at scale the
-    // recompute is the right trade against caching a source-sized relation.
-    src -> (if (df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-              scope.track(filtered.cache())
-            else filtered)
+    // the normalizer's regex chain is the engine's hottest expression, and
+    // it is evaluated in the filter AND in the projection, per physical pass
+    // (a range exchange alone makes two passes: sample + shuffle write);
+    // caching the normalized view runs it exactly once per row
+    src -> scope.track(filtered.cache())
   }
 
   private def dateColsOf(src: String): Seq[String] = rules.forSource(src).map(_.dateSource).distinct
@@ -226,13 +217,17 @@ final class CarrotEngine(
     * summary_mapstream table sorted by stringified key. */
   def summary(threshold: Long = 0): DataFrame = CarrotMetrics.summary(this, threshold)
 
+  /** The counted relation behind [[summary]] and the console log counts,
+    * aggregated once per engine. */
+  private[etl] lazy val metricsCounted: DataFrame =
+    scope.track(CarrotMetrics.counted(this).cache())
+
   // internal accessors for CarrotMetrics
   private[etl] def metricsSchema: OmopSchema = schema
   private[etl] def metricsRules: CarrotRules = rules
   private[etl] def metricsRaw: Map[String, DataFrame] = rawSources
   private[etl] def metricsBuilds: Map[String, TargetBuild] = builds
   private[etl] def metricsDateCols(src: String): Seq[String] = dateColsOf(src)
-  private[etl] def sparkSession: SparkSession = spark
 
   // ------------------------------------------------------------ standard
 

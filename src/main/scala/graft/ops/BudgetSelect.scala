@@ -183,11 +183,12 @@ object BudgetSelect {
     // within a group, ascending pid IS the group's rank order (range
     // partitioning on (group, rank) keeps each group's rows contiguous
     // and ordered across partitions). The raw group key rides along for
-    // budgetsOf implementations that order by it (injective-cast
-    // assumption: one raw key per cast key, already load-bearing in the
-    // budgets-map join).
+    // budgetsOf implementations that order by it. Any one value serves
+    // (injective-cast assumption: one raw key per cast key, already
+    // load-bearing in the budgets-map join), and any_value, unlike min,
+    // accepts non-orderable group columns such as maps.
     val cells = ranged.groupBy(col("_bs_pid"), gKey.as("_bs_g"))
-      .agg(sum(cost).as("_bs_tot"), min(col(groupCol)).as("_bs_graw"))
+      .agg(sum(cost).as("_bs_tot"), any_value(col(groupCol)).as("_bs_graw"))
       .collect()
       .map(r => (r.getLong(0), Option(r.getString(1)),
         if (r.isNullAt(2)) None else Some(r.getLong(2)), r.get(3)))

@@ -77,15 +77,8 @@ object IdAssign {
     scope.track(withPos)
 
     // one job: materializes the cache AND returns the per-partition counts
-    val t0 = System.nanoTime()
-    val countsDf = withPos.groupBy(col("_ia_pid")).agg(count(lit(1)).as("_ia_cnt"))
-    val counts = countsDf.collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
-    if (sys.env.contains("GRAFT_PROF")) {
-      println(f"[prof]   idassign collect ($idCol) ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      countsDf.queryExecution.tracker.phases.foreach { case (p, s) =>
-        println(f"[prof]     phase $p%-18s ${(s.endTimeMs - s.startTimeMs) / 1e3}%.2f s")
-      }
-    }
+    val counts = withPos.groupBy(col("_ia_pid")).agg(count(lit(1)).as("_ia_cnt"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
     var acc = offset
     val offsets: Map[Long, Long] = counts.map { case (pid, cnt) =>
       val start = acc; acc += cnt; pid -> start

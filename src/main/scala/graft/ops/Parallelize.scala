@@ -22,43 +22,4 @@ object Parallelize {
     if (df.queryExecution.toRdd.getNumPartitions < target) df.repartition(target)
     else df
   }
-
-  /** Like `ensure`, but when the input really is under-split, ALSO cache the
-    * repartitioned rows (tracked in `scope`).
-    *
-    * The repartition alone is not enough: Catalyst pushes deterministic
-    * filters back down THROUGH a repartition, so a CPU-heavy predicate (the
-    * carrot date-normalization regexes) lands in the scan stage — which for
-    * a compact single-split file is ONE task, and the whole filter runs
-    * serially no matter how wide the shuffle above it is. A cached relation
-    * is an optimizer barrier: downstream filters become InMemoryTableScan
-    * predicates evaluated on the repartitioned (parallel) partitions.
-    *
-    * A SPLITTABLE input that is under-split is small (< parallelism ×
-    * maxPartitionBytes), so the cache is bounded; at cluster scale inputs
-    * carry thousands of splits, this is a no-op, and nothing is cached —
-    * filters then push to the scan, which is exactly right when the scan
-    * itself is parallel. A NON-splittable source (one gzip CSV) is one
-    * partition at any size, so 'under-split ⇒ small' fails there: when the
-    * optimizer's size estimate is KNOWN to exceed the splittable budget,
-    * the rows still repartition (spreading the downstream work) but stream
-    * through uncached instead of spilling the block store (round-3 advice).
-    * An UNKNOWN estimate (the Long.MaxValue defaultSizeInBytes sentinel —
-    * e.g. a JDBC relation) keeps the cache: those sources are the ones
-    * whose `_row_idx` snapshot the cache pins, and a JDBC read the engine
-    * chose not to partition is small by construction. */
-  def ensureMaterialized(df: DataFrame, scope: CacheScope): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    if (df.queryExecution.toRdd.getNumPartitions >= target) df
-    else {
-      val maxPart = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-      val budget = BigInt(target.toLong) * maxPart
-      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val knownLarge = est > budget && est < BigInt(Long.MaxValue)
-      if (knownLarge) df.repartition(target)
-      else scope.track(df.repartition(target).cache())
-    }
-  }
 }

@@ -146,6 +146,21 @@ class BudgetSelectSpec extends AnyFunSuite {
     assert(got == Set(1L, 3L))
   }
 
+  test("per-group: a non-orderable (map-typed) group column is accepted") {
+    // the group key is matched by its string cast; the raw key riding
+    // along must not require an ordering the column type lacks
+    val df = Seq((1L, Map("k" -> "en"), 1L, 2L), (2L, Map("k" -> "en"), 2L, 2L),
+        (3L, Map("k" -> "fr"), 1L, 2L))
+      .toDF("id", "g", "score", "cost")
+    val enKey = df.select(col("g").cast("string")).head().getString(0)
+    val got = CacheScope.withScope { scope =>
+      graft.ops.BudgetSelect.selectByBudgetPerGroup(df, "g", "cost", Map(enKey -> 2L), scope,
+          col("score").asc, col("id").asc)
+        .select("id").collect().map(_.getLong(0)).toSet
+    }
+    assert(got == Set(1L))
+  }
+
   test("null costs spend nothing and survive while the running sum fits") {
     val df = Seq((1L, 1L, Some(5L)), (2L, 2L, None), (3L, 3L, Some(5L)), (4L, 4L, None))
       .toDF("id", "score", "cost")

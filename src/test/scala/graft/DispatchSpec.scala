@@ -288,39 +288,71 @@ class DispatchSpec extends AnyFunSuite {
       s"main sources still hardcode the reference checkout: $offenders")
   }
 
-  test("run emits the reference's console log lines (INPUT/TARGET/separator/Elapsed)") {
+  test("only the entry points read environment variables") {
+    // library code takes its settings as arguments; the mains that own a
+    // process (Bench, Verify, CarrotCli, CurateCli) are the only readers
+    val entryPoints = Set("Bench.scala", "Verify.scala", "CarrotCli.scala", "CurateCli.scala")
+    val srcMain = java.nio.file.Paths.get("src/main/scala")
+    val offenders = java.nio.file.Files.walk(srcMain).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filterNot(p => entryPoints.contains(p.getFileName.toString))
+      .filter { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8)
+        text.contains("sys.env") || text.contains("System.getenv")
+      }
+      .map(_.toString).toList.sorted
+    assert(offenders.isEmpty, s"non-entry-point sources read the environment: $offenders")
+  }
+
+  test("run's console log counts match a hand-derived inline corpus; the threshold filters only the summary") {
     // reference logger surface: run.py:304-307 (per-file input count +
     // per-target output counts), :312 (80-dash separator), :341 (final
     // elapsed) — lines injected to a buffer so counts assert as data
-    val td = s"${Golden.RefRoot}/tests/test_data/integration_test1"
-    val rules = s"${Golden.RefRoot}/tests/test_V2/rules-v2.json"
+    val (inputs, rules) = InlineCorpus.write()
     val out = java.nio.file.Files.createTempDirectory("cli_log_out").toString
+    val threshold = 4L
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    CarrotCli.run(Array("--rules-file", rules, "--inputs", td,
-      "--output", out, "--person", "src_PERSON"), env = Map.empty,
+    CarrotCli.run(Array("--rules-file", rules, "--inputs", inputs, "--output", out,
+      "--log-file-threshold", threshold.toString), env = Map.empty,
       log = lines += (_: String))
-    val inputLines = lines.filter(_.startsWith("INPUT file data : "))
-    assert(inputLines.nonEmpty, s"no INPUT lines in: $lines")
-    // every mapped source logs exactly one INPUT line, full (untruncated)
-    // file name, with its raw row count and an elapsed-seconds suffix
-    val person = inputLines.find(_.contains("src_PERSON.csv"))
-    assert(person.isDefined, s"no src_PERSON INPUT line in: $inputLines")
+    def dataLines(f: String): Seq[String] =
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get(f)).asScala.toSeq.drop(1)
+
+    // one INPUT line per source with its full file name and the raw data
+    // rows of the fixture (file lines minus the header)
     val inRe = """INPUT file data : (\S+): input count (\d+), time since start (\S+) secs""".r
-    assert(inputLines.forall(l => inRe.findFirstIn(l).isDefined), inputLines)
-    val personCount = person.get match { case inRe(_, n, _) => n.toLong }
-    // raw data rows = file lines minus the header
-    val want = java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(s"$td/src_PERSON.csv")).size - 1L
-    assert(personCount == want, s"src_PERSON input count $personCount != $want")
-    // TARGET lines carry per-table output counts; person's must match the
-    // written person.tsv row count
+    val inCounts = lines.collect { case inRe(src, n, _) => src -> n.toLong }.toMap
+    assert(inCounts == Map(
+      "persons.csv" -> (InlineCorpus.Persons.size - 1L),
+      "symptoms.csv" -> (InlineCorpus.Symptoms.size - 1L)), lines)
+
+    // TARGET lines follow their source's INPUT line: the hand-derived
+    // counts, equal to the written TSVs' row counts
     val tgtRe = """TARGET: (\w+): output count (\d+)""".r
-    val tgtLines = lines.filter(_.startsWith("TARGET: "))
-    assert(tgtLines.nonEmpty && tgtLines.forall(l => tgtRe.findFirstIn(l).isDefined))
-    val personOut = tgtLines.collectFirst {
-      case tgtRe("person", n) => n.toLong }
-    assert(personOut.isDefined)
-    assert(personOut.get == Golden.readTsv(s"$out/person.tsv").count())
+    var cur = ""
+    val tgtCounts = lines.flatMap {
+      case inRe(s, _, _) => cur = s; None
+      case tgtRe(t, n) => Some((cur, t) -> n.toLong)
+      case _ => None
+    }.toMap
+    assert(tgtCounts == InlineCorpus.TargetRows, lines)
+    assert(dataLines(s"$out/person.tsv").size == tgtCounts(("persons.csv", "person")))
+    assert(dataLines(s"$out/observation.tsv").size == tgtCounts(("symptoms.csv", "observation")))
+    assert(dataLines(s"$out/person_ids.tsv").size == InlineCorpus.PersonIds)
+
+    // the summary keeps only rows with outcount >= threshold, while the
+    // log above stays unthresholded (person's 3 rows are below 4 and still
+    // logged). By hand: the 4 matched observation rows roll up to exactly
+    // three keys at >= 4; every per-concept and every person key is below.
+    val summary = dataLines(s"$out/summary_mapstream.tsv").map(_.split("\t", -1).toSeq)
+    assert(summary.forall(_(10).toLong >= threshold), summary)
+    assert(summary == Seq(
+      Seq("inline", "all", "all", "observation", "all", "", "0", "0", "0", "0", "4"),
+      Seq("inline", "symptoms", "all", "all", "all", "", "8", "0", "0", "0", "4"),
+      Seq("inline", "symptoms", "all", "observation", "all", "", "0", "3", "0", "0", "4")),
+      summary)
+
     // the separator and the final elapsed line, in reference order
     assert(lines.contains("-" * 80))
     assert(lines.last.matches("""Elapsed time = \d+\.\d{5} secs"""), lines.last)

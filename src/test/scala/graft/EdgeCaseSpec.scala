@@ -248,6 +248,20 @@ class EdgeCaseSpec extends AnyFunSuite {
       s"leaked caches: ${(sc.getPersistentRDDs.keySet -- before).toSeq.sorted}")
   }
 
+  test("engine close() unpersists every cache, the metrics relation included (inline corpus)") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (inputs, rules) = InlineCorpus.write()
+    val eng = Golden.engine(inputs, rules)
+    eng.run().values.foreach(_.count())
+    eng.summary(0).collect()
+    graft.etl.CarrotMetrics.runLogCounts(eng).collect()
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty, "engine should have cached")
+    eng.close()
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      s"leaked caches: ${(sc.getPersistentRDDs.keySet -- before).toSeq.sorted}")
+  }
+
   test("scoped dedup unpersists its shingle cache") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
